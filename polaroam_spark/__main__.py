@@ -68,6 +68,7 @@ def cmd_ingest(args) -> None:
 
 def cmd_stops(args) -> None:
     from polaroam_spark.api import StopDetect
+    from polaroam_spark.operators.stops import stop_medians
 
     spark = _spark(args)
     model = StopDetect(
@@ -76,10 +77,15 @@ def cmd_stops(args) -> None:
         min_staying_time=args.min_staying_time,
         max_time_between=args.max_time_between,
     )
-    events = model.fit_predict(spark.read.parquet(args.input))
-    medians = model.compute_label_medians()
-    events.write.mode("overwrite").parquet(f"{args.output}/stop_events")
-    medians.write.mode("overwrite").parquet(f"{args.output}/stop_medians")
+    events_path = f"{args.output}/stop_events"
+    model.fit_predict(spark.read.parquet(args.input)).write.mode(
+        "overwrite"
+    ).parquet(events_path)
+    # medians from the events just written: stop detection runs once,
+    # not once per output
+    stop_medians(spark.read.parquet(events_path)).write.mode(
+        "overwrite"
+    ).parquet(f"{args.output}/stop_medians")
 
 
 def cmd_cluster(args) -> None:
@@ -116,10 +122,13 @@ def cmd_label(args) -> None:
     df = prepare_labeling(spark.read.parquet(args.input))
     df = detect_home(df, total_days=args.total_days)
     df = detect_work(df, total_days=args.total_days)
-    df.write.mode("overwrite").parquet(f"{args.output}/labeled")
-    home_work_wide(df).write.mode("overwrite").parquet(
-        f"{args.output}/home_work_wide"
-    )
+    labeled_path = f"{args.output}/labeled"
+    df.write.mode("overwrite").parquet(labeled_path)
+    # the wide table from the labels just written: the labeling plan
+    # is analysed and run once, not once per output
+    home_work_wide(spark.read.parquet(labeled_path)).write.mode(
+        "overwrite"
+    ).parquet(f"{args.output}/home_work_wide")
 
 
 def cmd_corpus(args) -> None:

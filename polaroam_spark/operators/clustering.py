@@ -170,23 +170,20 @@ def cluster_stops_dbscan(
         {"_glat": glat, "_glon": glon}
     )
 
-    # Pin the Python stage's parallelism (r19 optimization round,
-    # guide §2.2/§2.4): AQE's bytes-based partition coalescing is the
-    # wrong adaptivity for a compute-bound applyInPandas stage — the
-    # per-user coordinate table is a few hundred KB at bench scale,
-    # so AQE coalesced the groupBy exchange to ONE partition and the
-    # whole per-user DBSCAN sweep ran serially in a single Python
-    # worker (measured: ~4.5s of the row's ~6s). An explicit keyed
-    # repartition is exempt from AQE coalescing, and because uid is a
-    # subset of both downstream keys it satisfies dropDuplicates AND
-    # groupBy — still exactly ONE exchange. The count scales with the
-    # session (cores locally, cluster-wide parallelism on a real
-    # deployment), never a constant.
-    sess = medians.sparkSession
-    n_py = max(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # The Python stage runs one task per core: the keyed repartition
+    # uses defaultParallelism (cores locally, cluster-wide cores on a
+    # real deployment); spark.sql.shuffle.partitions does not size it.
+    # Each applyInPandas task costs ~0.25 s of fixed overhead even with
+    # reused Python workers (40 groups on a 4-core machine: 32 tasks
+    # 2.46 s, 4 tasks 0.56 s), so more tasks than cores only add
+    # overhead. The
+    # repartition stays keyed on purpose: AQE never coalesces an
+    # explicit repartition, whereas its bytes-based coalescing shrank
+    # the groupBy exchange of this few-hundred-KB table to ONE task
+    # and ran every user's DBSCAN serially. uid is a subset of both
+    # downstream keys, so dropDuplicates and groupBy share this one
+    # exchange.
+    n_py = medians.sparkSession.sparkContext.defaultParallelism
     unique_coords = (
         with_cells.select("uid", F.col("_glat").alias("latitude"), F.col("_glon").alias("longitude"))
         .repartition(n_py, "uid")
@@ -296,7 +293,7 @@ def _snapped_unique_nodes(
     )
 
 
-def attach_medoids(labeled: DataFrame, broadcast: bool = True) -> DataFrame:
+def attach_medoids(labeled: DataFrame) -> DataFrame:
     """Attach medoid stats to member rows (reference models.py:263) —
     column-for-column the old aggregate+join-back output (keys first,
     then member columns, then the three stats), row values identical
@@ -310,10 +307,8 @@ def attach_medoids(labeled: DataFrame, broadcast: bool = True) -> DataFrame:
     lineage under it) executed TWICE per action (2 FlatMapGroupsInPandas
     nodes on the r19 bench plan; guide §2.4 — two operations keyed the
     same way share one exchange). Now: one exchange on the cluster
-    key, zero joins, the member side never recomputes. ``broadcast``
-    is retained for API compatibility but no longer consulted — there
-    is no longer a join side to broadcast, which also removes the old
-    national-scale broadcast-limit caveat.
+    key, zero joins, the member side never recomputes, and there is
+    no join side to broadcast (so no national-scale broadcast limit).
     """
     member_cols = [
         c for c in labeled.columns

@@ -2,6 +2,8 @@
 {stops,cluster,label} chained through parquet stage dirs (the
 reference's disk-staged batch-driver workflow, __main__.py)."""
 
+from collections import Counter
+
 import pytest
 
 import pyspark.sql.functions as F
@@ -57,6 +59,106 @@ def test_cli_stops_cluster_label(spark, tmpdir):
     assert len(wide) == 1
     assert abs(wide[0].h_lat - 19.40) < 0.01
     assert abs(wide[0].w_lat - 19.50) < 0.01
+
+
+def _row_set(df):
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_cli_mobility_chain_matches_in_memory(spark, tmpdir):
+    """Each disk-staged output of stops -> cluster -> label holds the
+    same rows as the in-memory StopDetect -> compute_dbscan ->
+    detect_home -> detect_work -> home_work_wide chain, over several
+    users with home, work and moving pings."""
+    from polaroam_spark.__main__ import main
+    from polaroam_spark.api import StopDetect
+    from polaroam_spark.operators.homework import (
+        detect_home,
+        detect_work,
+        home_work_wide,
+        prepare_labeling,
+    )
+
+    base, days = 1700006400, 6
+    rows = []
+    for u in range(4):
+        home = (19.40 + 0.3 * u, -99.10)
+        work = (19.50 + 0.3 * u, -99.20 - 0.1 * u)
+        for day in range(days):
+            jit = day * 1e-5
+            d0 = base + day * 86400
+            for i in range(5):  # night stay
+                rows.append((f"u{u}", home[0] + jit, home[1], d0 + i * 3600))
+            for i in range(3):  # moving: far apart, never a stop
+                rows.append((
+                    f"u{u}", home[0] + 0.02 * (i + 1), home[1],
+                    d0 + 7 * 3600 + i * 600,
+                ))
+            for i in range(5):  # working-hours stay
+                rows.append((
+                    f"u{u}", work[0] + jit, work[1],
+                    d0 + 10 * 3600 + i * 3600,
+                ))
+    pings = spark.createDataFrame(
+        rows,
+        "uid string, latitude double, longitude double, timestamp long",
+    )
+    src = str(tmpdir.join("pings"))
+    pings.write.parquet(src)
+
+    stops_out = str(tmpdir.join("stops"))
+    cluster_out = str(tmpdir.join("clustered"))
+    label_out = str(tmpdir.join("labels"))
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert main([
+            "stops", "--input", src, "--output", stops_out, "--r1", "50",
+        ]) == 0
+        assert main([
+            "cluster", "--input", f"{stops_out}/stop_medians",
+            "--output", cluster_out, "--r2", "2000",
+        ]) == 0
+        assert main([
+            "label", "--input", cluster_out, "--output", label_out,
+            "--total-days", str(days),
+        ]) == 0
+    finally:
+        # the CLI's get_spark resets the shared session's partitions
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+
+    # cached so each comparison runs one stage of the chain, not the
+    # whole lineage again
+    model = StopDetect(r1=50, r2=2000)
+    events = model.fit_predict(spark.read.parquet(src)).cache()
+    medians = model.compute_label_medians()
+    clustered = model.compute_dbscan().cache()
+    labeled = detect_work(
+        detect_home(prepare_labeling(clustered), total_days=days),
+        total_days=days,
+    ).cache()
+    expected = {
+        f"{stops_out}/stop_events": events,
+        f"{stops_out}/stop_medians": medians,
+        cluster_out: clustered,
+        f"{label_out}/labeled": labeled,
+        f"{label_out}/home_work_wide": home_work_wide(labeled),
+    }
+    try:
+        for path, want in expected.items():
+            got = spark.read.parquet(path)
+            assert got.columns == want.columns, path
+            got_rows = _row_set(got)
+            assert got_rows == _row_set(want), path
+            assert got_rows, path
+    finally:
+        for df in (events, clustered, labeled):
+            df.unpersist()
+    wide = {r.uid: r for r in spark.read.parquet(
+        f"{label_out}/home_work_wide").collect()}
+    assert sorted(wide) == [f"u{u}" for u in range(4)]
+    for u in range(4):
+        assert abs(wide[f"u{u}"].h_lat - (19.40 + 0.3 * u)) < 0.01
+        assert abs(wide[f"u{u}"].w_lat - (19.50 + 0.3 * u)) < 0.01
 
 
 def test_cli_corpus_pipeline(spark, tmpdir):

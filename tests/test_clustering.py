@@ -1,6 +1,8 @@
 """Clustering property tests (SURVEY.md §5): numpy DBSCAN semantics,
 fidelity-path vs distributed-path equivalence, medoid rules."""
 
+import re
+
 import numpy as np
 import pytest
 from hypothesis import example, given, settings
@@ -151,6 +153,66 @@ def test_dbscan_fidelity_vs_distributed(spark):
     a = cluster_stops_dbscan(med, r2=25.0, min_samples=2).collect()
     b = cluster_stops_dbscan_distributed(med, r2=25.0).collect()
     assert _canonical(a) == _canonical(b)
+
+
+def _plan_nodes(plan, class_name):
+    """Physical plan nodes of one class, looking through adaptive
+    wrappers and query stages."""
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == class_name:
+            found.append(node)
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+def test_dbscan_python_stage_one_task_per_core(spark):
+    """The per-user DBSCAN stage's input is hash-partitioned on uid
+    into defaultParallelism partitions whatever
+    spark.sql.shuffle.partitions is (AQE on), and the labels do not
+    depend on that setting."""
+    rng = np.random.default_rng(11)
+    rows = [
+        (f"u{u}", k, 10.0 + (k % 2) * 0.01 + rng.uniform(0, 1e-4),
+         10.0 + rng.uniform(0, 1e-4), 1700000000 + k, 1700000400 + k)
+        for u in range(6)
+        for k in range(8)
+    ]
+    med = spark.createDataFrame(
+        rows,
+        "uid string, stop_events long, latitude double, longitude double, "
+        "start_timestamp long, end_timestamp long",
+    )
+    cores = spark.sparkContext.defaultParallelism
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    labels = {}
+    try:
+        for n in (1, 7, 200):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            out = cluster_stops_dbscan(med, r2=25.0)
+            labels[n] = sorted(out.collect())
+            (py,) = _plan_nodes(
+                out._jdf.queryExecution().executedPlan(),
+                "FlatMapGroupsInPandasExec",
+            )
+            part = py.child().outputPartitioning()
+            assert part.numPartitions() == cores, (n, part.toString())
+            assert re.fullmatch(
+                r"hashpartitioning\(uid#\d+, \d+\)", part.toString()
+            ), part.toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert labels[1] == labels[7] == labels[200]
+    assert {r.stop_locations for r in labels[1]} == {0, 1}
 
 
 def test_convex_hull_square_and_triangle(spark):
