@@ -98,6 +98,30 @@ def _distance_matrix(
     raise ValueError(f"Unsupported distance metric: {distance_metric}")
 
 
+def _with_cells(
+    medians: DataFrame, min_spacial_resolution: float
+) -> DataFrame:
+    """``medians`` plus ``_glat``/``_glon``: the coordinates snapped
+    to the ``min_spacial_resolution`` grid, or unchanged when it is
+    0 — the cell key every clusterer joins its labels back on."""
+    if min_spacial_resolution > 0:
+        glat = grid_snap("latitude", min_spacial_resolution)
+        glon = grid_snap("longitude", min_spacial_resolution)
+    else:
+        glat, glon = F.col("latitude"), F.col("longitude")
+    return medians.withColumns({"_glat": glat, "_glon": glon})
+
+
+def _checked_metric(distance_metric) -> str:
+    """``distance_metric`` as a string, or ``ValueError`` unless it is
+    one :func:`_distance_matrix` supports — raised at plan-build
+    time, not inside a Python worker."""
+    metric = str(distance_metric)
+    if metric not in ("haversine", "euclidean"):
+        raise ValueError(f"Unsupported distance metric: {metric}")
+    return metric
+
+
 def dbscan_labels(
     lat: np.ndarray,
     lon: np.ndarray,
@@ -161,14 +185,7 @@ def cluster_stops_dbscan(
     + ``stop_locations`` (long, -1 = noise; ids unique per uid only,
     reference quirk SURVEY.md §2i).
     """
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-    with_cells = medians.withColumns(
-        {"_glat": glat, "_glon": glon}
-    )
+    with_cells = _with_cells(medians, min_spacial_resolution)
 
     # The Python stage runs one task per core: the keyed repartition
     # uses defaultParallelism (cores locally, cluster-wide cores on a
@@ -192,9 +209,7 @@ def cluster_stops_dbscan(
 
     eps = float(r2)
     msamp = int(min_samples)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _checked_metric(distance_metric)
 
     # O(n^2) distance matrix per user: 20k points ~= 3.2 GB of doubles.
     # Beyond that the task would silently eat executor memory — fail
@@ -277,13 +292,8 @@ def _snapped_unique_nodes(
     production computes, and a drift between two hand-maintained
     copies of this aggregation would silently desynchronize them
     (see _user_eps_graph's bit-identical contract)."""
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
     return (
-        medians.withColumns({"_glat": glat, "_glon": glon})
+        _with_cells(medians, min_spacial_resolution)
         .groupBy(
             "uid",
             F.col("_glat").alias("latitude"),
@@ -405,12 +415,6 @@ def cluster_stops_dbscan_distributed(
     # never lose pairs.
     cell_deg = math.degrees(float(r2) / EARTH_RADIUS_M)
 
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-
     # Persist the snapped point table FIRST, then take the latitude
     # bound from it: the bound must be a plan-build-time scalar (cell
     # geometry depends on it), and deriving it from the persisted
@@ -421,7 +425,7 @@ def cluster_stops_dbscan_distributed(
     # bound from raw latitudes would make lon_cell_deg fractionally
     # too small to guarantee 3x3 coverage at that snapped latitude.
     base = (
-        medians.withColumns({"_glat": glat, "_glon": glon})
+        _with_cells(medians, min_spacial_resolution)
         .select("uid", F.col("_glat").alias("latitude"), F.col("_glon").alias("longitude"))
         .dropDuplicates(["uid", "latitude", "longitude"])
     )
@@ -638,7 +642,7 @@ def cluster_stops_dbscan_distributed(
     labeled_pts = materialize(labeled_pts)
 
     if min_spacial_resolution > 0:
-        out = medians.withColumns({"_glat": glat, "_glon": glon}).join(
+        out = _with_cells(medians, min_spacial_resolution).join(
             labeled_pts.withColumnsRenamed(
                 {"latitude": "_glat", "longitude": "_glon"}
             ),
@@ -1513,9 +1517,7 @@ def community_invariants(
         medians, min_spacial_resolution
     )
     eps = float(r2)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _checked_metric(distance_metric)
     max_group = 20_000
 
     def _certify(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1641,9 +1643,7 @@ def cluster_communities(
     w_exp = float(weight_exponent)
     use_weights = bool(weighted)
     singles_own_label = bool(label_singleton)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _checked_metric(distance_metric)
     if backend not in ("native", "infomap"):
         raise ValueError(
             f"unknown backend {backend!r}: use 'native' or 'infomap'"
@@ -1703,12 +1703,7 @@ def cluster_communities(
         _communities, schema=_communities_schema(unique_coords)
     )
 
-    if min_spacial_resolution > 0:
-        glat = grid_snap("latitude", min_spacial_resolution)
-        glon = grid_snap("longitude", min_spacial_resolution)
-    else:
-        glat, glon = F.col("latitude"), F.col("longitude")
-    with_cells = medians.withColumns({"_glat": glat, "_glon": glon})
+    with_cells = _with_cells(medians, min_spacial_resolution)
     return (
         with_cells.join(
             labeled_coords.withColumnsRenamed(
@@ -1843,9 +1838,7 @@ def communities_backend_differential(
         )
     unique_coords = _snapped_unique_nodes(medians, min_spacial_resolution)
     eps = float(r2)
-    metric = str(distance_metric)
-    if metric not in ("haversine", "euclidean"):
-        raise ValueError(f"Unsupported distance metric: {metric}")
+    metric = _checked_metric(distance_metric)
     trials, sd = int(num_trials), int(seed)
     if trials < 1:
         raise ValueError(

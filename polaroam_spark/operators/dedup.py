@@ -9,6 +9,14 @@ No all-pairs comparison ever materializes, so every path survives a
 bucket width, and verification cost is proportional to candidate
 pairs, not n².
 
+Every bucketed pair generator (MinHash bands, fingerprint chunks,
+hyperplane buckets, incremental batches) draws its candidates from
+ONE kernel, :func:`_bucket_pairs` — normal-bucket self-join plus a
+star to the min-id representative of each hot bucket — and every
+probed frame (corpus band tables, batch probes, the right side of
+``similarity.embedding_similarity_join``) from its one-sided twin
+:func:`_hot_guard`. Callers own only their verify and dedup order.
+
 No reference counterpart (the reference is a mobility engine); these
 are the beyond-reference components required by the build brief.
 """
@@ -49,6 +57,100 @@ def _finalize_pairs(
     for c in caches:
         c.unpersist()
     return out
+
+
+def _bucket_pairs(
+    keyed: DataFrame,
+    bucket_cols: list[str],
+    max_bucket_size: int,
+    payload: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """THE candidate kernel of every bucketed pair generator (MinHash
+    bands, fingerprint chunks, hyperplane buckets). ``keyed`` holds
+    ``_id``, the ``bucket_cols`` and the ``payload`` columns; returns
+    ``(windowed, candidates)``: the persisted bucket-sized frame —
+    the caller hands it to :func:`_finalize_pairs` — and candidate
+    pairs ``id_a, id_b`` plus ``<p>_a, <p>_b`` per payload column.
+
+    Normal buckets (≤ ``max_bucket_size`` rows) self-join with
+    ``a._id < b._id``. A hot bucket of B rows (constant boilerplate,
+    constant image regions, template embeddings) would emit B²/2
+    candidates from ONE join task, so it switches to a star: every
+    member pairs with the bucket's min-id representative only (B-1
+    candidates). Member-member pairs inside a hot bucket are not
+    emitted, but they collapse to the same representative, so dedup
+    semantics survive; :func:`duplicate_components` gives the full
+    transitive closure. Bucket sizes come from a partition-only
+    window — no driver-side key collection, no shuffle beyond the
+    bucket key the self-join needs anyway; the representative's
+    payload rides the same window as a struct-min (ids are distinct,
+    so the payload never compares).
+
+    Candidates are neither verified nor deduplicated — a pair sharing
+    k buckets appears k times — so each caller picks its order: a
+    pure pair function cheaper to compute than to shuffle (hamming,
+    cosine) is verified BEFORE the dedup, so the dedup exchange moves
+    ``(id_a, id_b, score)`` instead of both payloads and failing
+    candidates never shuffle (r19); a verify that needs a join
+    (MinHash's shingle sets) dedups first.
+
+    The persist is load-bearing: the windowed frame feeds both
+    self-join sides and the star branch, and exchange reuse does not
+    kick in across them (verified on the executed adaptive plan: 3
+    Window nodes, 0 ReusedExchange), so without it the bucket-key
+    derivation and the window shuffle run three times."""
+    w = Window.partitionBy(*bucket_cols)
+    rep = F.struct("_id", *payload) if payload else F.col("_id")
+    windowed = keyed.withColumns(
+        {"_bn": F.count("*").over(w), "_rep": F.min(rep).over(w)}
+    ).persist()
+    rep_id = "_rep._id" if payload else "_rep"
+    normal = windowed.filter(F.col("_bn") <= max_bucket_size)
+    hot = windowed.filter(F.col("_bn") > max_bucket_size)
+    cand_normal = (
+        normal.alias("a")
+        .join(normal.alias("b"), on=bucket_cols, how="inner")
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(
+            F.col("a._id").alias("id_a"),
+            F.col("b._id").alias("id_b"),
+            *[F.col(f"a.{p}").alias(f"{p}_a") for p in payload],
+            *[F.col(f"b.{p}").alias(f"{p}_b") for p in payload],
+        )
+    )
+    cand_hot = hot.filter(F.col("_id") != F.col(rep_id)).select(
+        F.col(rep_id).alias("id_a"),
+        F.col("_id").alias("id_b"),
+        *[F.col(f"_rep.{p}").alias(f"{p}_a") for p in payload],
+        *[F.col(p).alias(f"{p}_b") for p in payload],
+    )
+    return windowed, cand_normal.unionByName(cand_hot)
+
+
+def _hot_guard(
+    keyed: DataFrame,
+    bucket_cols: list[str],
+    id_col: str,
+    max_bucket_size: int,
+) -> DataFrame:
+    """One-sided twin of :func:`_bucket_pairs` for a frame that is
+    PROBED by another (corpus band tables, ingest-batch probes, the
+    right side of a two-table join): keep a row if its bucket holds
+    ≤ ``max_bucket_size`` rows or it is the bucket's min-id
+    representative, so a hot bucket contributes one row and bounds
+    the probe join's fan-out. ``max_bucket_size=0`` keeps exactly
+    the representatives. Returns ``keyed``'s columns."""
+    w = Window.partitionBy(*bucket_cols)
+    return (
+        keyed.withColumns(
+            {"_bn": F.count("*").over(w), "_rep": F.min(id_col).over(w)}
+        )
+        .filter(
+            (F.col("_bn") <= F.lit(max_bucket_size))
+            | (F.col(id_col) == F.col("_rep"))
+        )
+        .select(*keyed.columns)
+    )
 
 
 def _shingle_set(
@@ -149,19 +251,11 @@ def minhash_lsh_pairs(
     Output: ``id_a, id_b, jaccard_sim`` with id_a < id_b and
     jaccard_sim ≥ threshold.
 
-    Degenerate-bucket guard: a bucket holding B documents (constant
+    Band buckets larger than ``max_bucket_size`` (constant
     boilerplate — cookie banners, license headers — lands thousands
-    of near-identical docs in one band bucket) would emit B²/2
-    candidate pairs from ONE join task. Buckets larger than
-    ``max_bucket_size`` therefore switch to a star topology: every
-    member pairs with the bucket's min-id representative only (B-1
-    candidates, still exact-Jaccard-verified). Direct member-member
-    pairs inside a hot bucket are not emitted, but they collapse to
-    the same representative, so dedup semantics survive; feed the
-    pairs to :func:`duplicate_components` for the full transitive
-    closure. Bucket sizes come from a partition-only window — no
-    driver-side key collection, no extra shuffle beyond the bucket
-    key the join shuffles on anyway.
+    of near-identical docs in one bucket) pair each member with the
+    bucket's min-id representative only, still exact-Jaccard-verified;
+    see :func:`_bucket_pairs` for the star semantics.
     """
     from ..session import fan_out
 
@@ -199,49 +293,36 @@ def minhash_lsh_pairs(
     # result eagerly and release all intermediate caches before
     # returning (see _finalize_pairs).
     sh = sh.persist()
+    banded, verified = _minhash_pairs_from_sigs(
+        sh, bands, jaccard_threshold, max_bucket_size
+    )
+    return _finalize_pairs(verified, [sh, banded], materialize)
 
+
+def _minhash_pairs_from_sigs(
+    sh: DataFrame,
+    bands: int,
+    jaccard_threshold: float,
+    max_bucket_size: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Band self-join + exact-Jaccard verify over a persisted signature
+    frame ``(_id, _shingles, _sig)`` — shared by
+    :func:`minhash_lsh_pairs` and the batch side of the incremental
+    path. Returns ``(banded, pairs)``: the band cache the caller
+    releases, and ``id_a, id_b, jaccard_sim`` with ``id_a < id_b``.
+
+    Candidates are deduplicated BEFORE the verify: Jaccard needs both
+    shingle sets joined in, and a pair sharing several bands would
+    otherwise pay those joins once per band."""
     banded = sh.select(
         "_id", F.explode(band_hashes("_sig", bands)).alias("_band")
     ).select("_id", "_band.band", "_band.bucket")
-    bucket_w = Window.partitionBy("band", "bucket")
-    banded = banded.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min("_id").over(bucket_w),
-        }
+    banded, cand = _bucket_pairs(
+        banded, ["band", "bucket"], max_bucket_size
     )
-    # persist: referenced by both self-join sides AND the hot path —
-    # exchange reuse does NOT kick in here (verified on the executed
-    # adaptive plan: 3 Window nodes, 0 ReusedExchange), so without the
-    # persist the explode + band-hash + window shuffle runs three
-    # times. At bench scale that is a wash (AQE coalescing hides it);
-    # at corpus scale three shuffles of the banded table vs one is
-    # not. The frame is five narrow columns.
-    banded = banded.persist()
-    normal = banded.filter(F.col("_bn") <= max_bucket_size)
-    hot = banded.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(
-            normal.alias("b"),
-            on=["band", "bucket"],
-            how="inner",
-        )
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep")).select(
-        F.col("_rep").alias("id_a"), F.col("_id").alias("id_b")
-    )
-    cand = cand_normal.unionByName(cand_hot).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-
     verified = (
-        cand.join(
+        cand.dropDuplicates(["id_a", "id_b"])
+        .join(
             sh.select(
                 F.col("_id").alias("id_a"),
                 F.col("_shingles").alias("_sh_a"),
@@ -259,7 +340,7 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
         .select("id_a", "id_b", "jaccard_sim")
     )
-    return _finalize_pairs(verified, [sh, banded], materialize)
+    return banded, verified
 
 
 def dedup_minhash_lsh(
@@ -514,13 +595,10 @@ def fingerprint_hamming_pairs(
     feeds perceptual hashes through it). NULL fingerprints are
     dropped (undecodable media can't be near anything).
 
-    Same degenerate-bucket guard as :func:`minhash_lsh_pairs`: a
-    (chunk, value) bucket holding B rows — constant regions drive a
-    chunk to a constant — would emit B²/2 candidates from one task.
-    Buckets over ``max_bucket_size`` switch to star pairs against
-    the bucket's min-id member (still hamming-verified);
-    member-member pairs inside a hot bucket collapse through the
-    representative via :func:`duplicate_components`.
+    (chunk, value) buckets over ``max_bucket_size`` — constant
+    regions drive a chunk to a constant — pair each member with the
+    bucket's min-id member only, still hamming-verified; see
+    :func:`_bucket_pairs` for the star semantics.
 
     ``id_col`` is assumed to identify a document (one fingerprint
     per id). Duplicate-id inputs resolve each pair ANY-MATCH — the
@@ -556,60 +634,22 @@ def fingerprint_hamming_pairs(
             )
         ).alias("_c"),
     ).select("_id", "_fp", "_c.chunk", "_c.val")
-    bucket_w = Window.partitionBy("chunk", "val")
-    chunked = chunked.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            # struct-min: the representative's id AND fingerprint in
-            # one pass (ids are distinct, so _fp never compares)
-            "_rep": F.min(F.struct("_id", "_fp")).over(bucket_w),
-        }
+    chunked, cand = _bucket_pairs(
+        chunked, ["chunk", "val"], max_bucket_size, payload=("_fp",)
     )
-    # referenced by both self-join sides + the hot path (see the
-    # minhash persist note). Materialized EAGERLY (r19 optimization
-    # round): the self-join needs no exchange (the window already
-    # partitioned by (chunk, val)), so both sides' InMemoryTableScan
-    # iterators open inside the SAME task and race a cold cache —
-    # the full fingerprint lineage (for images: decode + dHash, the
-    # heaviest stage of the operator) ran once per side on top of the
-    # window build (~3x total, stage-profiled on the image bench
-    # row). One count() builds the cache once; the join then reads it.
-    chunked = chunked.persist()
+    # Materialized EAGERLY (r19 optimization round): the self-join
+    # needs no exchange (the window already partitioned by (chunk,
+    # val)), so both sides' InMemoryTableScan iterators open inside
+    # the SAME task and race a cold cache — the full fingerprint
+    # lineage (for images: decode + dHash, the heaviest stage of the
+    # operator) ran once per side on top of the window build (~3x
+    # total, stage-profiled on the image bench row). One count()
+    # builds the cache once; the join then reads it.
     chunked.count()
-    normal = chunked.filter(F.col("_bn") <= max_bucket_size)
-    hot = chunked.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on=["chunk", "val"], how="inner")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._fp").alias("_fa"),
-            F.col("b._fp").alias("_fb"),
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep._id")).select(
-        F.col("_rep._id").alias("id_a"),
-        F.col("_id").alias("id_b"),
-        F.col("_rep._fp").alias("_fa"),
-        F.col("_fp").alias("_fb"),
-    )
-    # verify BEFORE the pair dedup (r19 optimization round, guide
-    # §2.3 "aggregate/filter before you shuffle"): hamming is a pure
-    # function of the pair, so filtering first cannot change the
-    # deduplicated set — but it moves the bit_count map-side, drops
-    # every failing candidate before the exchange, and narrows the
-    # shuffled row from (id_a, id_b, _fa, _fb) to (id_a, id_b,
-    # hamming). The old shape shuffled BOTH fingerprints for every
-    # candidate (including the vast majority that fail verification
-    # on a diverse corpus) just to recompute hamming after the dedup.
-    cand = cand_normal.unionByName(cand_hot)
     verified = (
         cand.withColumn(
             "hamming",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))),
+            F.bit_count(F.col("_fp_a").bitwiseXOR(F.col("_fp_b"))),
         )
         .filter(F.col("hamming") <= F.lit(max_hamming))
         .select("id_a", "id_b", "hamming")
@@ -839,9 +879,9 @@ def embedding_neardup_pairs(
     operators/similarity.py for the bucketing primitive.
 
     Hot buckets (> ``max_bucket_size`` vectors — e.g. a pile of
-    zero-ish or template embeddings hashing identically) take star
-    pairs against the bucket's min-id vector instead of the B²/2
-    self-join, mirroring :func:`minhash_lsh_pairs`.
+    zero-ish or template embeddings hashing identically) pair each
+    member with the bucket's min-id vector only; see
+    :func:`_bucket_pairs` for the star semantics.
 
     ``scorer='arrow'`` swaps the verification cosine for the
     numpy/BLAS pandas UDF (similarity.py's scale knob) — candidate
@@ -868,45 +908,11 @@ def embedding_neardup_pairs(
         "_vec",
         num_planes,
     )
-    bucket_w = Window.partitionBy("lsh_bucket")
-    b = b.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min(F.struct("_id", "_vec")).over(bucket_w),
-        }
+    b, cand = _bucket_pairs(
+        b, ["lsh_bucket"], max_bucket_size, payload=("_vec",)
     )
-    b = b.persist()  # both self-join sides + hot path
-    normal = b.filter(F.col("_bn") <= max_bucket_size)
-    hot = b.filter(F.col("_bn") > max_bucket_size)
-
-    cand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on="lsh_bucket", how="inner")
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._vec").alias("_va"),
-            F.col("b._vec").alias("_vb"),
-        )
-    )
-    cand_hot = hot.filter(F.col("_id") != F.col("_rep._id")).select(
-        F.col("_rep._id").alias("id_a"),
-        F.col("_id").alias("id_b"),
-        F.col("_rep._vec").alias("_va"),
-        F.col("_vec").alias("_vb"),
-    )
-    # verify BEFORE the pair dedup (r19 optimization round, guide
-    # §2.3 — the fingerprint_hamming_pairs fix): cosine is a pure
-    # function of the pair, so filter-then-dedup yields the identical
-    # set while the dedup exchange moves (id_a, id_b, cosine) instead
-    # of BOTH embedding vectors per candidate, and sub-threshold
-    # candidates never shuffle at all. (A vector pair can only reach
-    # the dedup once per shared bucket; multi-bucket duplicates carry
-    # identical cosines, so the kept row is identical too.)
-    cand = cand_normal.unionByName(cand_hot)
     verified = (
-        cand.withColumn("cosine", score("_va", "_vb"))
+        cand.withColumn("cosine", score("_vec_a", "_vec_b"))
         .filter(F.col("cosine") >= F.lit(cosine_threshold))
         .select("id_a", "id_b", "cosine")
         .dropDuplicates(["id_a", "id_b"])
@@ -1610,8 +1616,7 @@ def expand_index_bands(
     """Exploded, hot-guarded LSH band keys of a corpus index: one row
     per (corpus doc, band) with hot buckets (cross-corpus boilerplate
     piles larger than ``max_bucket_size``) collapsed to their min-id
-    representative, bounding per-bucket fan-out exactly like
-    :func:`minhash_lsh_pairs`'s star guard.
+    representative (:func:`_hot_guard`).
 
     This table is a pure function of the static index — compute it
     ONCE per index refresh and persist it (it is three narrow
@@ -1623,19 +1628,8 @@ def expand_index_bands(
         F.col(id_col).alias("_cid"),
         F.explode(band_hashes("sig", bands)).alias("_band"),
     ).select("_cid", "_band.band", "_band.bucket")
-    bucket_w = Window.partitionBy("band", "bucket")
-    idx_bands = idx_bands.withColumns(
-        {
-            "_bn": F.count("*").over(bucket_w),
-            "_rep": F.min("_cid").over(bucket_w),
-        }
-    )
     return (
-        idx_bands.filter(
-            (F.col("_bn") <= F.lit(max_bucket_size))
-            | (F.col("_cid") == F.col("_rep"))
-        )
-        .select("_cid", "band", "bucket")
+        _hot_guard(idx_bands, ["band", "bucket"], "_cid", max_bucket_size)
         # bands marker: band keys are a function of `bands` (slice
         # width AND bucket seed), so a persisted table probed under a
         # different bands silently never collides — the readers check
@@ -1653,45 +1647,35 @@ def _incremental_pairs_from_sigs(
     jaccard_threshold: float,
     max_bucket_size: int,
     include_batch_pairs: bool,
-) -> DataFrame:
+) -> tuple[DataFrame, list[DataFrame]]:
     """Pair generation given prepared signatures: ``new_sh`` has
-    columns (_nid, _nsh, _nsig) — caller owns its persistence (it is
-    consumed by the band explode, both verification joins, and the
-    batch self-join)."""
+    columns (_id, _shingles, _sig) — caller owns its persistence (it
+    is consumed by the band explode, both verification joins, and the
+    batch self-join). Returns ``(pairs, caches)``: the caller releases
+    ``caches`` (the batch self-join's band frame) with ``new_sh``."""
     new_bands = new_sh.select(
-        "_nid", F.explode(band_hashes("_nsig", bands)).alias("_band")
-    ).select("_nid", "_band.band", "_band.bucket")
+        "_id", F.explode(band_hashes("_sig", bands)).alias("_band")
+    ).select("_id", "_band.band", "_band.bucket")
 
     # batch-side hot-bucket guard for the CORPUS join: a degenerate
     # batch bucket (100k boilerplate docs in one (band, bucket))
     # would otherwise fan out batch_rows x index_bucket_rows
-    # candidates from a single join task. Same star rule and the same
-    # bounded-miss tradeoff as expand_index_bands on the index side:
-    # only the min-id batch doc in a hot bucket probes the corpus
-    # through that bucket (its bucket-mates still reach the corpus
-    # through their other, non-hot bands, and still pair with the
-    # representative via the guarded batch self-join below).
-    bw0 = Window.partitionBy("band", "bucket")
-    corpus_probe = (
-        new_bands.withColumns(
-            {
-                "_bn0": F.count("*").over(bw0),
-                "_rep0": F.min("_nid").over(bw0),
-            }
-        )
-        .filter(
-            (F.col("_bn0") <= F.lit(max_bucket_size))
-            | (F.col("_nid") == F.col("_rep0"))
-        )
-        .select("_nid", "band", "bucket")
+    # candidates from a single join task. Same bounded-miss tradeoff
+    # as expand_index_bands on the index side: only the min-id batch
+    # doc in a hot bucket probes the corpus through that bucket (its
+    # bucket-mates still reach the corpus through their other,
+    # non-hot bands, and still pair with the representative via the
+    # batch self-join below).
+    corpus_probe = _hot_guard(
+        new_bands, ["band", "bucket"], "_id", max_bucket_size
     )
     cand = (
         corpus_probe.join(index_bands, on=["band", "bucket"])
-        .select("_nid", "_cid")
-        .dropDuplicates(["_nid", "_cid"])
+        .select("_id", "_cid")
+        .dropDuplicates(["_id", "_cid"])
     )
     corpus_pairs = (
-        cand.join(new_sh.select("_nid", "_nsh"), on="_nid")
+        cand.join(new_sh.select("_id", "_shingles"), on="_id")
         .join(
             index.select(
                 F.col(id_col).alias("_cid"),
@@ -1699,70 +1683,33 @@ def _incremental_pairs_from_sigs(
             ),
             on="_cid",
         )
-        .withColumn("jaccard_sim", jaccard("_nsh", "_csh"))
+        .withColumn("jaccard_sim", jaccard("_shingles", "_csh"))
         .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
         .select(
-            F.col("_nid").alias("id_new"),
+            F.col("_id").alias("id_new"),
             F.col("_cid").alias("id_match"),
             "jaccard_sim",
             F.lit("corpus").alias("match_side"),
         )
     )
     if not include_batch_pairs:
-        return corpus_pairs
+        return corpus_pairs, []
 
     # batch-internal pairs from the SAME signature frame — the batch
-    # is never re-shingled or re-signed. Hot batch buckets get the
-    # same star guard as minhash_lsh_pairs.
-    bw = Window.partitionBy("band", "bucket")
-    nb = new_bands.withColumns(
-        {
-            "_bn": F.count("*").over(bw),
-            "_rep": F.min("_nid").over(bw),
-        }
+    # is never re-shingled or re-signed. The persisted band window of
+    # this self-join is the same plan as the corpus probe's guard
+    # window above, so the probe reads that cache too: one band
+    # window shuffle per batch.
+    banded, batch = _minhash_pairs_from_sigs(
+        new_sh, bands, jaccard_threshold, max_bucket_size
     )
-    normal = nb.filter(F.col("_bn") <= F.lit(max_bucket_size))
-    bcand_normal = (
-        normal.alias("a")
-        .join(normal.alias("b"), on=["band", "bucket"])
-        .filter(F.col("a._nid") < F.col("b._nid"))
-        .select(
-            F.col("a._nid").alias("id_a"), F.col("b._nid").alias("id_b")
-        )
+    batch_pairs = batch.select(
+        F.col("id_b").alias("id_new"),
+        F.col("id_a").alias("id_match"),
+        "jaccard_sim",
+        F.lit("batch").alias("match_side"),
     )
-    bcand_hot = (
-        nb.filter(
-            (F.col("_bn") > F.lit(max_bucket_size))
-            & (F.col("_nid") != F.col("_rep"))
-        )
-        .select(F.col("_rep").alias("id_a"), F.col("_nid").alias("id_b"))
-    )
-    bcand = bcand_normal.unionByName(bcand_hot).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-    batch_pairs = (
-        bcand.join(
-            new_sh.select(
-                F.col("_nid").alias("id_a"), F.col("_nsh").alias("_sh_a")
-            ),
-            on="id_a",
-        )
-        .join(
-            new_sh.select(
-                F.col("_nid").alias("id_b"), F.col("_nsh").alias("_sh_b")
-            ),
-            on="id_b",
-        )
-        .withColumn("jaccard_sim", jaccard("_sh_a", "_sh_b"))
-        .filter(F.col("jaccard_sim") >= F.lit(jaccard_threshold))
-        .select(
-            F.col("id_b").alias("id_new"),
-            F.col("id_a").alias("id_match"),
-            "jaccard_sim",
-            F.lit("batch").alias("match_side"),
-        )
-    )
-    return corpus_pairs.unionByName(batch_pairs)
+    return corpus_pairs.unionByName(batch_pairs), [banded]
 
 
 def _batch_signatures(
@@ -1776,9 +1723,9 @@ def _batch_signatures(
     return build_minhash_index(
         new_docs, text_col, id_col, shingle_k, num_hashes, portable
     ).select(
-        F.col(id_col).alias("_nid"),
-        F.col("shingles").alias("_nsh"),
-        F.col("sig").alias("_nsig"),
+        F.col(id_col).alias("_id"),
+        F.col("shingles").alias("_shingles"),
+        F.col("sig").alias("_sig"),
     )
 
 
@@ -1817,13 +1764,14 @@ def minhash_lsh_pairs_incremental(
     smaller id as id_match). Feed ``id_new`` of any row to an
     anti-join to keep only novel documents.
 
-    The batch signature frame is persisted (consumed by four plan
-    branches). Pass ``materialize=True`` to compute the result
-    eagerly and unpersist the batch cache before returning — the
-    contract for a long-running per-batch ingest loop (the streaming
-    wrapper does this every micro-batch; a manual ``dedup_incremental``
-    loop should pass it too or executor storage accumulates one batch
-    signature frame per call).
+    The batch signature frame (consumed by four plan branches) and,
+    with batch pairs, the batch band frame are persisted. Pass
+    ``materialize=True`` to compute the result eagerly and unpersist
+    the batch caches before returning — the contract for a
+    long-running per-batch ingest loop (the streaming wrapper does
+    this every micro-batch; a manual ``dedup_incremental`` loop
+    should pass it too or executor storage accumulates the batch
+    frames of every call).
     """
     check_index_format(index, shingle_k, num_hashes, portable)
     new_sh = _batch_signatures(
@@ -1835,7 +1783,7 @@ def minhash_lsh_pairs_incremental(
         )
     else:
         check_bands_format(index_bands, bands)
-    pairs = _incremental_pairs_from_sigs(
+    pairs, caches = _incremental_pairs_from_sigs(
         new_sh,
         index,
         index_bands,
@@ -1845,7 +1793,7 @@ def minhash_lsh_pairs_incremental(
         max_bucket_size,
         include_batch_pairs,
     )
-    return _finalize_pairs(pairs, [new_sh], materialize)
+    return _finalize_pairs(pairs, [new_sh, *caches], materialize)
 
 
 def dedup_incremental(

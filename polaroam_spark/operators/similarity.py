@@ -553,9 +553,11 @@ def embedding_similarity_join(
     or near-identical vectors land in the same bucket and meet in a
     bucket equi-join — never a cross product. Hot buckets on EITHER
     side (> ``max_bucket_size``) degrade to comparing against the
-    right bucket's min-id representative only — an approximation,
-    documented rather than silent: a template-vector pile matches
-    through one representative instead of exploding one join task.
+    right bucket's min-id representative only
+    (:func:`~polaroam_spark.operators.dedup._hot_guard`) — an
+    approximation, documented rather than silent: a template-vector
+    pile matches through one representative instead of exploding one
+    join task.
 
     SIZING: the bucket space is only ``2^num_planes``, and occupancy
     grows linearly with table size — once
@@ -568,6 +570,7 @@ def embedding_similarity_join(
     instead). Dedup each side first for degenerate corpora.
     """
     from polaroam_spark.functions.vectors import make_scorer
+    from polaroam_spark.operators.dedup import _hot_guard
 
     rid = right_id or left_id
     rvec = right_vec or vec_col
@@ -589,28 +592,11 @@ def embedding_similarity_join(
         num_planes,
         bucketer,
     )
-    # ids only in the window aggregates — a min(struct(id, vec))
-    # would shuffle a second full vector copy per row
+    # ids only in the guard windows — a min(struct(id, vec)) would
+    # shuffle a second full vector copy per row
+    r_side = _hot_guard(rb, ["lsh_bucket"], "_rid", max_bucket_size)
+    rep = _hot_guard(rb, ["lsh_bucket"], "_rid", 0)
     w = Window.partitionBy("lsh_bucket")
-    rb = rb.withColumns(
-        {
-            "_rbn": F.count("*").over(w),
-            "_rep_id": F.min("_rid").over(w),
-        }
-    )
-    rep = rb.filter(F.col("_rid") == F.col("_rep_id")).select(
-        "lsh_bucket", "_rid", "_rv"
-    )
-    r_side = (
-        rb.filter(F.col("_rbn") <= max_bucket_size)
-        .select("lsh_bucket", "_rid", "_rv")
-        .unionByName(
-            rb.filter(
-                (F.col("_rbn") > max_bucket_size)
-                & (F.col("_rid") == F.col("_rep_id"))
-            ).select("lsh_bucket", "_rid", "_rv")
-        )
-    )
     lb = lb.withColumn("_lbn", F.count("*").over(w))
     cand = (
         lb.filter(F.col("_lbn") <= max_bucket_size)

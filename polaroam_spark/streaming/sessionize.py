@@ -308,9 +308,9 @@ def streaming_dedup_incremental(
     needs and a one-shot batch call doesn't: the index's band table
     (band explode + hot-bucket window — O(corpus)) is computed ONCE
     here and persisted across batches, and each batch's signature
-    cache is unpersisted as soon as its write lands, so a long-lived
-    stream neither recomputes the corpus side nor leaks executor
-    storage. Batch-internal near-dups collapse within each
+    and band caches are unpersisted as soon as its write lands, so a
+    long-lived stream neither recomputes the corpus side nor leaks
+    executor storage. Batch-internal near-dups collapse within each
     micro-batch; cross-batch dups are caught only against the index,
     so refresh the index at whatever cadence the accepted corpus is
     compacted (the standard lambda-ingest tradeoff, documented here
@@ -336,8 +336,9 @@ def streaming_dedup_incremental(
         new_sh = _batch_signatures(
             batch_df, text_col, id_col, shingle_k, num_hashes, portable
         ).persist()
+        caches = [new_sh]
         try:
-            pairs = _incremental_pairs_from_sigs(
+            pairs, batch_caches = _incremental_pairs_from_sigs(
                 new_sh,
                 index,
                 index_bands,
@@ -347,6 +348,7 @@ def streaming_dedup_incremental(
                 max_bucket_size,
                 include_batch_pairs=True,
             )
+            caches += batch_caches
             losers = pairs.select(
                 F.col("id_new").alias(id_col)
             ).dropDuplicates()
@@ -359,7 +361,8 @@ def streaming_dedup_incremental(
                 .parquet(output_path)
             )
         finally:
-            new_sh.unpersist()
+            for c in caches:
+                c.unpersist()
 
     writer = (
         docs_stream.writeStream.foreachBatch(_process)

@@ -922,6 +922,63 @@ def test_embedding_neardup_dedup_shuffles_verified_triples(spark):
     assert "first(_va" not in plan and "first(_vb" not in plan, plan
 
 
+def _agg_inputs(plan):
+    """Input column names of every HashAggregate node, ids stripped."""
+    return [
+        re.sub(r"#\d+L?", "", cols)
+        for cols in re.findall(
+            r"\(\d+\) HashAggregate[^\n]*\nInput \[\d+\]: \[([^\]]*)\]",
+            plan,
+        )
+    ]
+
+
+def test_minhash_plan_shape(spark, docs):
+    # the plan corpus_curate runs. Candidates dedup on the id pair
+    # alone — the shingle sets join in after, never first(_sh...) —
+    # the band window runs once, into its cache, and six cache scans
+    # feed both self-join sides, the star branch and the two verify
+    # joins (signature cache x2, band cache x3, plus the band
+    # explode's own scan of the signature cache)
+    from polaroam_spark.operators.dedup import minhash_lsh_pairs
+
+    plan = _plan(minhash_lsh_pairs(docs))
+    aggs = _agg_inputs(plan)
+    assert aggs and all(a == "id_a, id_b" for a in aggs), plan
+    assert "first(_sh" not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Window", plan, re.M)) == 1, plan
+    assert (
+        len(re.findall(r"^\(\d+\) InMemoryTableScan", plan, re.M)) == 6
+    ), plan
+
+
+def test_score_pair_dedups_aggregate_verified_triples(spark):
+    # tightens the two pins above against any payload column name:
+    # the partial dedup aggregate of the hamming and cosine pair
+    # generators (the one below the exchange) takes exactly
+    # (id_a, id_b, score)
+    from polaroam_spark.operators.dedup import (
+        embedding_neardup_pairs,
+        fingerprint_hamming_pairs,
+    )
+
+    fps = spark.createDataFrame(
+        [(i, (i * 2654435761) % (1 << 32)) for i in range(40)],
+        "doc_id long, fp long",
+    )
+    emb = spark.createDataFrame(
+        [(i, [float((i * j) % 7) - 3.0 for j in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    for df, score in (
+        (fingerprint_hamming_pairs(fps, "fp", bits=32), "hamming"),
+        (embedding_neardup_pairs(emb, cosine_threshold=0.5), "cosine"),
+    ):
+        plan = _plan(df)
+        aggs = _agg_inputs(plan)
+        assert len(aggs) == 2 and aggs[0] == f"id_a, id_b, {score}", plan
+
+
 def test_topk_windows_rank_projected_candidates(spark):
     # r19 optimization round: the per-query top-k window must rank the
     # (query_id, vec_id, cosine) projection — an Input [5] window means

@@ -311,6 +311,50 @@ def test_embedding_similarity_join_cross_table(spark):
     assert all(rid != 20 for (_, rid) in pairs)  # anti-parallel excluded
 
 
+# a template vector and its negation: every hyperplane sign flips, so
+# the two always land in different buckets
+_PILE = [1.0, 0.5, 0.25, 0.1]
+_FAR = [-x for x in _PILE]
+
+
+def _sim_join_pairs(spark, left_rows, right_rows):
+    from polaroam_spark.operators.similarity import (
+        embedding_similarity_join,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    return {
+        (r.left_id, r.right_id)
+        for r in embedding_similarity_join(
+            spark.createDataFrame(left_rows, schema),
+            spark.createDataFrame(right_rows, schema),
+            cosine_threshold=0.99,
+            num_planes=4,
+            max_bucket_size=3,
+        ).collect()
+    }
+
+
+def test_embedding_similarity_join_hot_right_bucket(spark):
+    # five identical right vectors overflow max_bucket_size=3: the
+    # left row meets only the pile's min-id representative
+    right = [(100 + i, _PILE) for i in range(5)] + [(200, _FAR)]
+    left = [(1, _PILE), (2, _FAR)]
+    assert _sim_join_pairs(spark, left, right) == {(1, 100), (2, 200)}
+
+
+def test_embedding_similarity_join_hot_left_bucket(spark):
+    # five identical left vectors overflow the cap; the right bucket
+    # (two rows) is not hot, yet each hot left row meets only its
+    # min-id representative 100, never 101
+    left = [(i, _PILE) for i in range(1, 6)] + [(9, _FAR)]
+    right = [(100, _PILE), (101, _PILE), (200, _FAR)]
+    assert _sim_join_pairs(spark, left, right) == {
+        *((i, 100) for i in range(1, 6)),
+        (9, 200),
+    }
+
+
 # ------------------------------------------------------------------ PQ
 @pytest.mark.slow
 def test_pq_roundtrip_clustered(spark):

@@ -1,29 +1,26 @@
 """Capture .explain('formatted') for every bench query into
-plans/r20/<query>_<suffix>.txt.
+$PLAN_OUT_DIR/<query>_<suffix>.txt (default: plans/).
 
-Usage: python tools/plan_capture_r20.py <suffix> [query ...]
+Usage: python tools/plan_capture.py <suffix> [query ...]
 
 Mirrors bench.py's query construction (same operators, same params)
 but dumps the physical plan instead of executing the noop sink.
 Construction side effects that bench.py also pays (medians parquet
-materialization, tokenizer training, KN model materialization) run
-here too — the captured plan is the plan of the FINAL frame the
-noop sink executes.
+materialization, tokenizer training, KN model materialization, the
+eager fingerprint-bucket count of the near-dup rows) run here too —
+the captured plan is the plan of the FINAL frame the noop sink
+executes. tools/probe.py imports ``builders`` from this module.
 """
 import io
 import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.environ.get(
-    "PLAN_OUT_DIR",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r20"),
-)
-suffix = sys.argv[1]
-only = set(sys.argv[2:]) or None
+OUT_DIR = os.environ.get("PLAN_OUT_DIR", os.path.join(ROOT, "plans"))
 
 from polaroam_spark import get_spark
 
@@ -34,6 +31,12 @@ import __spark_entry__ as em
 from pyspark.sql import functions as F
 
 builders = {}
+
+
+def fixture_dir(name):
+    # one fixture directory per scale factor: a directory built at
+    # another SF would silently change the size the row measures
+    return os.path.join(ROOT, ".scratch", f"{name}_{os.path.basename(os.path.normpath(SF_DIR))}")
 
 
 def q(name):
@@ -97,10 +100,7 @@ def b_ann():
     from polaroam_spark.operators.similarity import ann_lsh_topk
     emb = em._t(spark, SF_DIR, "embeddings")
     qdf = emb.filter(F.col("vec_id") < 50).select(F.col("vec_id").alias("query_id"), "embedding")
-    try:
-        return ann_lsh_topk(emb, qdf, k=10, num_planes=8, num_probes=3, bucketer="arrow")
-    except TypeError:
-        return ann_lsh_topk(emb, qdf, k=10, num_planes=8, num_probes=3)
+    return ann_lsh_topk(emb, qdf, k=10, num_planes=8, num_probes=3, bucketer="arrow")
 
 
 @q("text_quality")
@@ -217,13 +217,11 @@ def b_memo():
 
 @q("warc_wet")
 def b_warc():
-    # reuse bench.py's fixture dir when present; build it otherwise
-    # (same generator as bench.py's _prep_warc — fixture prep is
-    # untimed there too)
+    # built once per SF with bench.py's _prep_warc generator (fixture
+    # prep is untimed there too)
     from polaroam_spark.sources.warc import http_response_parts, read_warc, write_warc_file
 
-    scratch = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
-    warc_dir = os.path.join(scratch, "bench_warc")
+    warc_dir = fixture_dir("bench_warc")
     if not (os.path.isdir(warc_dir) and os.listdir(warc_dir)):
         os.makedirs(warc_dir, exist_ok=True)
         rows = em._t(spark, SF_DIR, "documents").select("doc_id", "text").collect()
@@ -245,6 +243,34 @@ def b_warc():
     return w.select(
         "record_id", "target_uri", http_response_parts("payload").alias("p")
     ).select("record_id", "target_uri", "p.status", "p.body")
+
+
+@q("image_neardup")
+def b_image():
+    # built once per SF with bench.py's _prep_images generator: PNGs
+    # with planted brightness twins, spread over 32 files
+    from pyspark.sql.functions import pandas_udf
+
+    from polaroam_spark.operators.multimodal import image_neardup_pairs
+
+    img_dir = fixture_dir("bench_images")
+    if not (os.path.isdir(img_dir) and os.listdir(img_dir)):
+        def _mk(lift):
+            return pandas_udf(
+                lambda col: col.map(lambda d: em.synth_png(int(d), lift)),
+                "binary",
+            )
+
+        ids = em._t(spark, SF_DIR, "documents").filter(
+            F.col("doc_id").isNotNull()).select("doc_id")
+        base = ids.select(
+            F.col("doc_id").alias("media_id"), _mk(0)(F.col("doc_id")).alias("content"))
+        twins = ids.select(
+            (F.col("doc_id") + 10_000_000).alias("media_id"),
+            _mk(4)(F.col("doc_id")).alias("content"),
+        )
+        base.unionByName(twins).repartition(32).write.mode("overwrite").parquet(img_dir)
+    return image_neardup_pairs(spark.read.parquet(img_dir), max_hamming=3)
 
 
 @q("kn_5gram")
@@ -275,17 +301,22 @@ def b_sft():
     return chunk_sft_sequences(encode_chat_sft(convs, ident), seq_len=512, drop_no_loss=False)
 
 
-os.makedirs(OUT_DIR, exist_ok=True)
-for name, fn in builders.items():
-    if only and name not in only:
-        continue
-    try:
-        df = fn()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(OUT_DIR, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(buf.getvalue())
-        print(f"captured {name}_{suffix}")
-    except Exception as e:
-        print(f"FAILED {name}: {e!r}")
+def main(suffix, only):
+    os.makedirs(OUT_DIR, exist_ok=True)
+    for name, fn in builders.items():
+        if only and name not in only:
+            continue
+        try:
+            df = fn()
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            with open(os.path.join(OUT_DIR, f"{name}_{suffix}.txt"), "w") as f:
+                f.write(buf.getvalue())
+            print(f"captured {name}_{suffix}")
+        except Exception as e:
+            print(f"FAILED {name}: {e!r}")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1], set(sys.argv[2:]))
